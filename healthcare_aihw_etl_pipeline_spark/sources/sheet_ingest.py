@@ -31,9 +31,9 @@ import re
 from dataclasses import dataclass, field
 from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from healthcare_aihw_etl_pipeline_spark.functions.scalar import (
     STATE_CODES,
@@ -41,7 +41,14 @@ from healthcare_aihw_etl_pipeline_spark.functions.scalar import (
     slug,
     try_double,
 )
-from healthcare_aihw_etl_pipeline_spark.operators.relational import union_by_name
+from healthcare_aihw_etl_pipeline_spark.operators.relational import (
+    dynamic_agg,
+    union_by_name,
+)
+from healthcare_aihw_etl_pipeline_spark.sources.sinks import (
+    write_table,
+    write_table_observed,
+)
 
 # Fixed output columns of the tidy fact table (/root/reference/README.md:93-105).
 FIXED = {"year", "state", "separations"}
@@ -147,6 +154,12 @@ def infer_schema(rows: Sequence[Sequence[object]]) -> SheetSchema | None:
     return schema if schema.valid else None
 
 
+def _cell_str(row: Sequence[object], i: int) -> str | None:
+    """Cell ``i`` of a possibly ragged row as a string; missing → None."""
+    v = row[i] if i < len(row) else None
+    return None if v is None else str(v)
+
+
 def parse_sheet(
     spark: SparkSession,
     rows: Sequence[Sequence[object]],
@@ -156,7 +169,12 @@ def parse_sheet(
     (/root/reference/main.py:72-131): returns columns
     ``*id_cols, state, separations, year`` or None for invalid sheets.
 
-    Everything below the inferred header runs as DataFrame algebra:
+    The rows below the inferred header become a string-typed wide frame
+    built from an Arrow table (one ``string`` column per kept column,
+    cells stringified with ``str``, None stays NULL, ragged rows padded
+    with NULL), so the scan is a JVM-only local relation: no Python
+    worker re-pickles rows the driver already holds. Everything after it
+    runs as DataFrame algebra:
     F1 null-drop on the first id column → X2 clean-text on id columns
     (missing → literal "nan", pandas parity) → X3 coerce-cast on state
     columns → R1 unpivot → F2 drop null measures → P6 year stamp.
@@ -166,17 +184,13 @@ def parse_sheet(
         return None
 
     kept = [(i, n) for i, n in enumerate(schema.colmap) if n is not None]
-    body = [
-        tuple(
-            None if (r[i] if i < len(r) else None) is None else str(r[i] if i < len(r) else None)
-            for i, _ in kept
-        )
-        for r in rows[schema.header_idx + 1 :]
+    body = rows[schema.header_idx + 1 :]
+    columns = [
+        pa.array([_cell_str(r, i) for r in body], type=pa.string()) for i, _ in kept
     ]
-    struct = T.StructType(
-        [T.StructField(n, T.StringType(), True) for _, n in kept]
+    wide = spark.createDataFrame(
+        pa.Table.from_arrays(columns, names=[n for _, n in kept])
     )
-    wide = spark.createDataFrame(body, schema=struct)
 
     first_id = schema.id_cols[0]
     wide = wide.where(F.col(first_id).isNotNull())  # F1
@@ -386,27 +400,35 @@ def compile_sheets_distributed(
     )
 
 
+def dim_candidates(tidy: DataFrame) -> list[str]:
+    """Every column outside {year, state, separations}: a dim if it holds
+    at least one value."""
+    return [c for c in tidy.columns if c not in FIXED]
+
+
+def non_null_dims(tidy: DataFrame) -> list[str]:
+    """The dims of `tidy` that contain at least one non-null value
+    (/root/reference/main.py:160 ``notna().any()``), found by one
+    metadata-sized aggregation."""
+    candidate = dim_candidates(tidy)
+    if not candidate:
+        return []
+    counts = tidy.agg(*[F.count(F.col(c)).alias(c) for c in candidate]).first()
+    return [c for c in candidate if counts[c] > 0]
+
+
+def fill_group(tidy: DataFrame, dims: Sequence[str]) -> DataFrame:
+    """Fill NULL `dims` to "" *before* grouping (pandas drops NaN group
+    keys — the fill is load-bearing for parity), then one hash
+    aggregation (one shuffle) summing separations per (year, state,
+    *dims) (/root/reference/main.py:161-164)."""
+    return dynamic_agg(tidy, ["year", "state", *dims], "separations", fill_dims=dims)
+
+
 def clean_aggregate(tidy: DataFrame) -> DataFrame:
     """A1 — the staging→clean contract (/root/reference/main.py:160-164):
-    dims are all columns except {year, state, separations} that contain at
-    least one non-null value; NULL dims are filled to "" *before* grouping
-    (pandas drops NaN group keys — the fill is load-bearing for parity).
-
-    One extra metadata-sized aggregation discovers non-null dims; the main
-    pass is a single hash aggregation (one shuffle).
-    """
-    candidate = [c for c in tidy.columns if c not in FIXED]
-    if candidate:
-        counts = tidy.agg(
-            *[F.count(F.col(c)).alias(c) for c in candidate]
-        ).first()
-        dims = [c for c in candidate if counts[c] > 0]
-    else:
-        dims = []
-    filled = tidy.na.fill("", subset=dims) if dims else tidy
-    return filled.groupBy("year", "state", *dims).agg(
-        F.sum("separations").alias("separations")
-    )
+    group by every non-null dim after filling NULL dims to ""."""
+    return fill_group(tidy, non_null_dims(tidy))
 
 
 def load_two_tier(tidy: DataFrame, base_path: str) -> tuple[str, str]:
@@ -414,9 +436,28 @@ def load_two_tier(tidy: DataFrame, base_path: str) -> tuple[str, str]:
     and clean (pre-aggregated) tables (/root/reference/main.py:155-165),
     as parquet instead of JDBC. Partitioned by year: every dashboard
     filter includes year (/root/reference/streamlit_app.py:57-63), so
-    partition pruning serves the interactive path at scale."""
+    partition pruning serves the interactive path at scale.
+
+    `tidy` is computed once: staging is written in one pass that also
+    counts each candidate dim's non-null values (``df.observe``), and
+    clean is the fill-then-group of the staged table read back from
+    disk, over the dims that count found. No separate count job runs and
+    `tidy`'s lineage is not recomputed for clean.
+    """
     staging = f"{base_path}/staging_admissions"
     clean = f"{base_path}/clean_admissions"
-    tidy.write.mode("overwrite").partitionBy("year").parquet(staging)
-    clean_aggregate(tidy).write.mode("overwrite").partitionBy("year").parquet(clean)
+    candidate = dim_candidates(tidy)
+    if candidate:
+        counts = write_table_observed(
+            tidy,
+            staging,
+            {c: F.count(F.col(c)) for c in candidate},
+            partition_by=["year"],
+        )
+    else:
+        write_table(tidy, staging, partition_by=["year"])
+        counts = {}
+    dims = [c for c in candidate if counts[c] > 0]
+    staged = tidy.sparkSession.read.parquet(staging)
+    write_table(fill_group(staged, dims), clean, partition_by=["year"])
     return staging, clean

@@ -100,6 +100,11 @@ def test_compile_no_valid_sheets_raises(spark):
         compile_sheets(spark, [fixtures.SHEET3_INVALID])
 
 
+def _sorted_rows(df):
+    cols = sorted(df.columns)
+    return sorted(map(repr, (tuple(r) for r in df.select(*cols).collect())))
+
+
 def test_staging_clean_invariant(spark, tmp_path):
     """SURVEY §3.3: clean computed at load time must equal on-the-fly
     aggregation of staging read back from storage (both fill-then-group)."""
@@ -108,12 +113,82 @@ def test_staging_clean_invariant(spark, tmp_path):
 
     clean_loaded = spark.read.parquet(clean_path)
     staging_loaded = spark.read.parquet(staging_path)
-    recomputed = clean_aggregate(staging_loaded)
+    assert _sorted_rows(clean_loaded) == _sorted_rows(clean_aggregate(staging_loaded))
 
-    cols = sorted(clean_loaded.columns)
-    a = sorted(map(repr, (tuple(r) for r in clean_loaded.select(*cols).collect())))
-    b = sorted(map(repr, (tuple(r) for r in recomputed.select(*cols).collect())))
-    assert a == b
+
+@pytest.mark.parametrize("shape", ["all_null_dim", "no_dims"])
+def test_load_two_tier_dim_edge_cases(spark, tmp_path, shape):
+    """Staging keeps every tidy column, an all-null dim included; clean
+    drops the all-null dim, still gets written when there are no dims,
+    and equals the aggregation of staging read back."""
+    from pyspark.sql import functions as F
+
+    tidy = compile_sheets(spark, fixtures.SHEETS)
+    if shape == "all_null_dim":
+        tidy = tidy.withColumn("ghost_dim", F.lit(None).cast("string"))
+    else:
+        tidy = tidy.select("state", "separations", "year")
+    staging_path, clean_path = load_two_tier(tidy, str(tmp_path))
+    staging = spark.read.parquet(staging_path)
+    clean = spark.read.parquet(clean_path)
+    assert _sorted_rows(staging) == _sorted_rows(tidy)
+    assert "ghost_dim" not in clean.columns
+    assert _sorted_rows(clean) == _sorted_rows(clean_aggregate(staging))
+
+
+def test_parse_sheet_header_only(spark):
+    """A sheet with a header and no body rows parses to an empty frame
+    with the schema a non-empty sheet of the same header gets."""
+    header = ["", "NSW", "VIC"]
+    empty = parse_sheet(spark, [header], 2020)
+    full = parse_sheet(spark, [header, ["a", 1, 2]], 2020)
+    assert empty.collect() == []
+    assert empty.schema == full.schema
+
+
+@pytest.mark.parametrize(
+    "rows, expected",
+    [
+        # an all-null state column yields no measures, not a type change
+        (
+            [["", "NSW", "VIC"], ["a", None, 1], ["b", None, "2"]],
+            [("a", "VIC", 1.0, 2020), ("b", "VIC", 2.0, 2020)],
+        ),
+        # short rows pad with NULL; cells past the header are ignored
+        (
+            [["", "NSW", "VIC"], ["a", 1], ["b", 2.5, "x", "extra"]],
+            [("a", "NSW", 1.0, 2020), ("b", "NSW", 2.5, 2020)],
+        ),
+    ],
+    ids=["all_null_state", "ragged_rows"],
+)
+def test_parse_sheet_sparse_cells(spark, rows, expected):
+    tidy = parse_sheet(spark, rows, 2020)
+    assert dict(tidy.dtypes)["separations"] == "double"
+    assert sorted(tuple(r) for r in tidy.collect()) == expected
+
+
+def test_parse_sheet_runs_no_python_worker(spark):
+    """The sheet frame is built from Arrow on the driver: its scan is a
+    JVM-only local relation, with no PythonRDD re-pickling rows."""
+    lineage = parse_sheet(spark, *fixtures.SHEET1)._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
+
+
+def test_compile_and_load_job_count(spark, tmp_path):
+    """compile + load computes tidy once: the staging write (which also
+    counts non-null dims), the staged table's footer read, and clean's
+    shuffle map and write — 4 jobs."""
+    sc = spark.sparkContext
+    group = f"ingest-job-count-{id(tmp_path)}"
+    sc.setJobGroup(group, "compile_sheets + load_two_tier")
+    try:
+        load_two_tier(compile_sheets(spark, fixtures.SHEETS), str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
 
 
 def test_clean_aggregate_drops_all_null_dims(spark):
